@@ -136,24 +136,17 @@ object StreamingOps {
     val withTs = stamped
       .withColumn(EventTs, TimeSeriesOps.nanosToTimestamp(F.col(TimeColumn)))
       .withWatermark(EventTs, watermarkDelay)
-    val aggs = s.outputs
-    withTs
-      .groupBy(F.col(EventTs) +: F.col(TimeColumn) +: key.map(F.col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .select((F.col(TimeColumn) +: key.map(F.col)) ++
-        s.names.map(n => F.col(s"`$n`")): _*)
+    s.evaluate(withTs, None, F.col(EventTs) +: F.col(TimeColumn) +: key.map(F.col),
+      F.col(TimeColumn) +: key.map(F.col))
   }
 
   private def windowed(df: DataFrame, s: Summarizer, windowCol: org.apache.spark.sql.Column,
                        watermarkDelay: String, key: Seq[String]): DataFrame = {
     val withTs = withEventTime(df).withWatermark(EventTs, watermarkDelay)
-    val aggs = s.outputs
-    withTs
-      .groupBy(windowCol.as("__w") +: key.map(F.col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .select((F.unix_micros(F.col("__w.start")) * 1000L).as("window_start") +:
+    s.evaluate(withTs, None, windowCol.as("__w") +: key.map(F.col),
+      (F.unix_micros(F.col("__w.start")) * 1000L).as("window_start") +:
         (F.unix_micros(F.col("__w.end")) * 1000L).as("window_end") +:
-        (key.map(F.col) ++ s.names.map(n => F.col(s"`$n`"))): _*)
+        key.map(F.col))
   }
 
   /**

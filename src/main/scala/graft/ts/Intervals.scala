@@ -83,10 +83,7 @@ object Intervals {
     require(!df.columns.contains(b), s"groupByInterval: $b is reserved")
     val bucketed = df.withColumn(b, bucketColumn(df, clock, inclusion, rounding))
       .filter(F.col(b).isNotNull)
-    val s = Summarizers.rows(df.columns.toSeq)
-    val aggs = s.outputs
-    val g = bucketed.groupBy((b +: key).map(F.col): _*).agg(aggs.head, aggs.tail: _*)
-    g.select((F.col(b).as(TimeColumn) +: key.map(F.col)) ++
-      s.names.map(n => F.col(s"`$n`")): _*)
+    Summarizers.rows(df.columns.toSeq).evaluate(bucketed, None,
+      (b +: key).map(F.col), F.col(b).as(TimeColumn) +: key.map(F.col))
   }
 }

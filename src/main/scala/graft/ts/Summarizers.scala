@@ -1,8 +1,9 @@
 package graft.ts
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.{functions => F}
+import scala.collection.immutable.ListMap
 
 /**
  * Evaluation context threaded through summarizer recipes: an optional row
@@ -16,19 +17,14 @@ final case class SummarizerCtx(
     pred: Option[Column], win: Option[WindowSpec],
     rec: Option[scala.collection.mutable.LinkedHashMap[String, Column]] = None,
     subst: Option[scala.collection.mutable.LinkedHashMap[String, (String, Column)]] = None) {
-  /** Apply the window spec (if any) to an aggregate expression; when a
-    * recorder is attached (summarizeState), also collect the distinct base
-    * aggregates the recipe is built from. When a SUBSTITUTION recorder is
-    * attached (Summarize.summarize), record the distinct base aggregate
-    * under a stable `__agg_<i>` alias and return a REFERENCE to it instead
-    * of the aggregate tree itself: derived outputs (correlation r, its
-    * t-stat, OLS renders) then mention each base sum once by name rather
-    * than inlining its whole tree at every use — without this the
-    * composed recipes blow up combinatorially (summarize_corr_pairs
-    * carried a 132 KB result projection whose analysis + Janino compile,
-    * not its data work, dominated the query). The rendered VALUES are
-    * unchanged: the same IEEE expression evaluates over the same
-    * aggregate results, one operator later. */
+  /** Apply the window spec (if any) to an aggregate expression. A recorder
+    * (`rec`, used by [[Summarizers.stateOf]]) collects the distinct base
+    * aggregates the recipe is built from. The substitution map (`subst`,
+    * set by [[Summarizer.evaluate]]) registers each distinct base aggregate
+    * under a stable `__agg_<i>` alias and returns a reference to that
+    * column, so derived outputs (correlation r, its t-stat, OLS renders)
+    * name each base sum instead of inlining its aggregate tree at every
+    * use. */
   def agg(c: Column): Column = {
     rec.foreach(_.getOrElseUpdate(c.toString, c))
     val w = win.map(c.over).getOrElse(c)
@@ -64,19 +60,46 @@ final case class Summarizer(
     private val pred: Option[Column] = None,
     private val pfx: Option[String] = None) {
 
-  /** Named aggregate expressions (un-aliased), for grouped evaluation. */
-  def namedOutputs: Seq[(String, Column)] = namedOutputs(None)
+  /** Output column names, in recipe order. */
+  def names: Seq[String] = withCtx(SummarizerCtx(None, None)).map(_._1)
 
-  /** Named expressions with every aggregate evaluated over `win`. */
-  def namedOutputs(win: Option[WindowSpec]): Seq[(String, Column)] =
-    build(SummarizerCtx(pred, win)).map { case (n, c) =>
-      (pfx.map(p => s"${p}_$n").getOrElse(n), c)
+  /**
+   * Evaluate the recipe over `df` in two stages; every Summarize mode
+   * goes through here. Stage one computes each distinct base aggregate of
+   * the recipe once, as `__agg_<i>`; stage two renders the outputs from
+   * those columns by name. Composed recipes (all-pairs correlation,
+   * weighted moments) use each base sum many times, and inlining its
+   * aggregate tree at every use grows the plan combinatorially. Rendered
+   * values are bit-identical to the inlined form: the same IEEE ops run
+   * over the same aggregate results, one operator later.
+   *
+   *  - grouped (`win = None`): `groupBy(by).agg(__agg_*)`, then `lead`
+   *    followed by the outputs;
+   *  - window (`win = Some(w)`): every row of `df` gains `__agg_<i>` over
+   *    `w`, then the outputs in recipe order (an output named like an
+   *    input column replaces it in place); the `__agg_*` columns are
+   *    dropped.
+   */
+  private[graft] def evaluate(df: DataFrame, win: Option[WindowSpec],
+                              by: Seq[Column] = Seq.empty,
+                              lead: Seq[Column] = Seq.empty): DataFrame = {
+    val clash = df.columns.filter(_.matches("__agg_\\d+"))
+    require(clash.isEmpty, s"input column(s) ${clash.mkString(", ")} clash " +
+      "with the names __agg_<i> reserved for summarizer base aggregates")
+    val m = scala.collection.mutable.LinkedHashMap.empty[String, (String, Column)]
+    val outs = withCtx(SummarizerCtx(None, win, subst = Some(m)))
+    val aggs = m.values.toSeq
+    win match {
+      case None =>
+        require(aggs.nonEmpty, s"summarizer ${names.mkString(", ")} has no aggregate")
+        val base = aggs.map { case (n, c) => c.as(n) }
+        df.groupBy(by: _*).agg(base.head, base.tail: _*)
+          .select(lead ++ outs.map { case (n, c) => c.as(n) }: _*)
+      case Some(_) =>
+        df.withColumns(ListMap(aggs: _*)).withColumns(ListMap(outs: _*))
+          .drop(aggs.map(_._1): _*)
     }
-
-  /** The aliased aggregate columns this summarizer produces. */
-  def outputs: Seq[Column] = namedOutputs.map { case (n, c) => c.as(n) }
-
-  def names: Seq[String] = namedOutputs.map(_._1)
+  }
 
   /** Pre-filter rows entering the aggregate (≙ SummarizerFactory.where). */
   def where(p: Column): Summarizer = copy(pred = Some(pred.fold(p)(_ && p)))
@@ -97,7 +120,7 @@ final case class Summarizer(
         case (Some(a), Some(b)) => Some(a && b)
         case (a, b) => a.orElse(b)
       },
-      ctx.win, ctx.rec)
+      ctx.win, ctx.rec, ctx.subst)
     build(merged).map { case (n, c) => (pfx.map(p => s"${p}_$n").getOrElse(n), c) }
   }
 }

@@ -66,10 +66,8 @@ object WindowOps {
     * the time value alone, so Spark rejects extra order columns there). */
   def summarizeWindows(df: DataFrame, window: TimeWindow, s: Summarizer,
                        key: Seq[String] = Seq.empty,
-                       tieBreak: Seq[String] = Seq.empty): DataFrame = {
-    val outs = s.namedOutputs(Some(spec(window, key, tieBreak)))
-    df.withColumns(outs.toMap)
-  }
+                       tieBreak: Seq[String] = Seq.empty): DataFrame =
+    s.evaluate(df, Some(spec(window, key, tieBreak)))
 
   /** For each row, append the window's rows as array<struct> column
     * `window_<name>` (≙ addWindows; README.md:169-188 naming). */
@@ -121,7 +119,6 @@ object WindowOps {
     val ord = (TimeColumn +: tieBreak).map(F.col)
     val w = Window.partitionBy(key.map(F.col): _*).orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val outs = s.namedOutputs(Some(w))
-    df.withColumns(outs.toMap)
+    s.evaluate(df, Some(w))
   }
 }

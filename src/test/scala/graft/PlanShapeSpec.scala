@@ -2,6 +2,9 @@ package graft
 
 import graft.ts._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -75,6 +78,30 @@ class PlanShapeSpec extends SparkTestBase {
     val g = Summarize.summarize(left, Summarizers.sum("lv"), Seq("k"))
     exchanges(g) shouldBe 1
     cartesians(g) shouldBe 0
+  }
+
+  it should "aggregate each distinct base aggregate once and render above it" in {
+    val df = Seq((1L, "x", 1.0, 2.0, 4.0), (2L, "y", 3.0, 5.0, 1.0))
+      .toDF("time", "k", "a", "b", "c")
+    val s = Summarizers.correlation(Seq("a", "b", "c"))
+    def hasAgg(e: Expression) = e.exists(_.isInstanceOf[AggregateExpression])
+    val grouped = Summarize.summarize(df, s, Seq("k")).queryExecution.optimizedPlan
+    val aggs = grouped.collect { case a: Aggregate => a }
+    aggs.size shouldBe 1
+    // 6 base sums per pair (n, Σx, Σy, Σx², Σy², Σxy), each computed once
+    val base = aggs.head.aggregateExpressions.filter(hasAgg)
+    base.size shouldBe 18
+    base.foreach {
+      case Alias(_: AggregateExpression, n) => n should startWith("__agg_")
+      case e => fail(s"not a bare base aggregate: $e")
+    }
+    // the render above the aggregate computes no aggregate of its own
+    grouped.collect {
+      case p if !p.isInstanceOf[Aggregate] && p.expressions.exists(hasAgg) => p
+    } shouldBe empty
+    val windowed = WindowOps.summarizeWindows(df, WindowOps.pastAbsoluteTime("1ns"),
+      s, Seq("k")).queryExecution.optimizedPlan
+    windowed.collect { case w: Window => w.windowExpressions }.flatten.size shouldBe 18
   }
 
   it should "plan merge as one range exchange with no global sort" in {

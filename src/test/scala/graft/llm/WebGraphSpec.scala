@@ -82,6 +82,19 @@ class WebGraphSpec extends SparkTestBase {
     got("a") should be > got("b")
   }
 
+  it should "drop edges with a null endpoint before ranking" in {
+    // (null, d) would add node d, (b, null) a null node and one more unit
+    // of b's outdegree; neither is an edge, so the ranks are exactly
+    // those of the non-null edges.
+    val edges = Seq(("a", "b"), ("b", "a"), ("a", "c"))
+    val withNulls = (edges.map { case (s, d) => (Option(s), Option(d)) } ++
+      Seq((None, Some("d")), (Some("b"), None), (None, None)))
+      .toDF("src_domain", "dst_domain")
+    val got = WebGraph.pageRankMicro(withNulls, iters = 3)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    got shouldBe replay(edges, 3)
+  }
+
   it should "release every cache (localized result leaves none behind)" in {
     val before = spark.sparkContext.getPersistentRDDs.size
     val r = WebGraph.pageRankMicro(

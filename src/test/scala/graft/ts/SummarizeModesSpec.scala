@@ -165,6 +165,32 @@ class SummarizeModesSpec extends SparkTestBase {
     out shouldBe Array(1.0, 3.0, 6.0, 5.0)
   }
 
+  it should "emit window outputs in recipe order" in {
+    val abc = Seq((1L, "x", 1.0, 2.0, 4.0), (2L, "x", 2.0, 1.0, 3.0),
+      (3L, "x", 4.0, 5.0, 1.0), (1L, "y", 3.0, 5.0, 1.0), (2L, "y", 1.0, 0.0, 2.0))
+      .toDF("time", "k", "a", "b", "c")
+    val s = Summarizers.correlation(Seq("a", "b", "c"))
+    val expected = abc.columns.toSeq ++ s.names
+    s.names shouldBe Seq("a_b_correlation", "a_b_correlationTStat",
+      "a_c_correlation", "a_c_correlationTStat",
+      "b_c_correlation", "b_c_correlationTStat")
+    WindowOps.summarizeWindows(abc, WindowOps.pastAbsoluteTime("2ns"), s,
+      Seq("k")).columns.toSeq shouldBe expected
+    WindowOps.addSummaryColumns(abc, s, Seq("k")).columns.toSeq shouldBe expected
+  }
+
+  it should "reject input columns that use the reserved __agg_<i> names" in {
+    val df = ser.withColumn("__agg_0", F.lit(1.0))
+    val s = Summarizers.sum("v")
+    Seq(
+      () => WindowOps.summarizeWindows(df, WindowOps.pastRows(1), s),
+      () => WindowOps.addSummaryColumns(df, s),
+      () => Summarize.summarize(df, s)).foreach { run =>
+      val e = the[IllegalArgumentException] thrownBy run()
+      e.getMessage should include("__agg_0")
+    }
+  }
+
   behavior of "addLagSum"
 
   it should "split core-window and lag-band sums like the reference's overlappable LagSum" in {
