@@ -422,23 +422,17 @@ class TimeSeriesDataFrame(DataFrame):
     def pipeline(self, id_col="doc_id", text_col="text", min_words=50,
                  max_words=100000, num_hashes=128, bands=16, shingle_size=3,
                  jaccard=0.5, span_n=4, sample_rate=0.9, pack_budget=256,
-                 pack_buckets=8, seed=42, boundary="persist",
-                 stage_dir=None):
+                 pack_buckets=8, seed=42):
         """The composed pre-training pass (graft.llm.Pipeline): hard
         filter -> MinHash-LSH near-dedup -> duplicated-span strip -> PII
         scrub -> quality-weighted PPS sample -> sequence packing ->
-        deterministic epoch shuffle. ``stage_dir`` (or
-        ``boundary="parquet:<dir>"``) selects write-once parquet stage
-        boundaries — the cluster-scale form; ``"persist"`` uses
-        construction-scoped caches (swept before return);
-        ``"recompute"`` materializes nothing. Output is bit-identical
-        across boundary modes. The call is EAGER (the shuffle sort and
-        any stage writes run now)."""
-        b = ("parquet:" + stage_dir) if stage_dir is not None else boundary
+        deterministic epoch shuffle. The two multi-consumer stages are
+        cached for the call and released before it returns. The call is
+        EAGER (the dedup rounds and the shuffle sort run now)."""
         return self._with(_api(self).pipelineRun(
             self._jdf, id_col, text_col, min_words, max_words, num_hashes,
             bands, shingle_size, jaccard, span_n, float(sample_rate),
-            pack_budget, pack_buckets, seed, b))
+            pack_budget, pack_buckets, seed))
 
     def top_k_tokens(self, text_col, k):
         """Exact corpus top-k token frequencies (count desc, token asc)."""

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for named registry queries to
   * files — the before/after plan evidence for optimization rounds
@@ -10,15 +9,7 @@ object PlanDump {
     require(args.length == 4,
       "usage: PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>")
     val Array(sfDir, outDir, suffix, qlist) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val names = qlist.split(",").map(_.trim).filter(_.nonEmpty)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // SPARK_GRAFT_PLANDUMP_EXEC=1: run the query through the noop sink

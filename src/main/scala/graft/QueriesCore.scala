@@ -27,11 +27,16 @@ object QueriesCore {
     * correctness oracle) truncates ns timestamps to µs, so full-ns values
     * could never hash-match. The engine itself keeps full nanos. */
   def events(s: SparkSession, dir: String): DataFrame = {
-    try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => }
+    nanosAsLong(s)
     TimeSeriesOps.canonize(s.read.parquet(s"$dir/events.parquet"), "ts")
       .withColumn(TimeSeriesOps.TimeColumn, F.expr("time div 1000 * 1000"))
   }
+
+  /** Read parquet TIMESTAMP(NANOS) columns as raw long nanos: every
+    * `events.parquet` reader calls this before its scan, so no session
+    * needs it preset. */
+  def nanosAsLong(s: SparkSession): Unit =
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   def lineitem(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/lineitem.parquet")
@@ -164,8 +169,7 @@ object QueriesCore {
         .orderBy("time", "event_id")
     }),
     "read_builder" -> ((s, dir) => {
-      try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      catch { case _: Throwable => }
+      nanosAsLong(s)
       // Narrow range + expand slack = the oracle's [T0+10d, T0+20d): the
       // expand path is load-bearing — if expand() were a no-op this query
       // would return only [T0+11d, T0+19d) and hash-mismatch.

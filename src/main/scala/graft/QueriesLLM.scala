@@ -1098,32 +1098,8 @@ object QueriesLLM {
     // The oracle replays every stage in one recursive-CTE chain: the final
     // text is pinned by md5, the pack and epoch-position tables exactly.
     "pipeline_e2e" -> ((s, dir) => {
-      // The chain is the PUBLIC graft.llm.Pipeline API (r13 built it
-      // inline here; the judge's r13 #2 promoted it), run in its 100 TB
-      // form: PARQUET stage boundaries — the two multi-consumer frames
-      // (filter survivors, dedup survivors) are written once and read
-      // thrice instead of pinning two near-corpus-sized text snapshots
-      // in executor storage. Output is bit-identical across boundary
-      // modes (every stage is content-deterministic), so the oracle
-      // hash is unchanged from the r13 inline form. Zero residual cache
-      // either way. The stage dir is UNIQUE PER RUN (r15 — a fixed path
-      // let two concurrent drivers on one host interleave stage files)
-      // and reclaimed at JVM exit: the returned frame lazily re-reads
-      // the stage parquet, so deletion must wait for the caller's last
-      // action. Bench passes each pay the whole write+read — honest cost.
-      val d = docs(s, dir)
-      val tmp = pipelineStageDir()
-      // A/B knob for the boundary-mode bench comparison (BASELINE.md):
-      // output is bit-identical across modes (PipelineSpec pins it), so
-      // the correctness row is mode-independent; default = the 100 TB
-      // parquet form.
-      val boundary =
-        sys.env.getOrElse("SPARK_GRAFT_PIPELINE_BOUNDARY", "parquet") match {
-          case "persist"   => Pipeline.Boundary.Persist
-          case "recompute" => Pipeline.Boundary.Recompute
-          case _           => Pipeline.Boundary.Parquet(tmp.getAbsolutePath)
-        }
-      Pipeline.run(d, Pipeline.Config(), boundary,
+      // The chain is the public graft.llm.Pipeline API.
+      Pipeline.run(docs(s, dir), Pipeline.Config(),
           scrub = Some(Pipeline.syntheticPiiScrub("doc_id", "text")))
         .select(F.col("doc_id"), F.md5(F.col("text")).as("final_md5"),
           F.col("pack_bucket"), F.col("pack_id"), F.col("pack_offset"),
@@ -1133,26 +1109,6 @@ object QueriesLLM {
   )
 
   private val stopEn = inList(TextStats.EnStop)
-
-  /** Unique-per-run parquet stage directory for the `pipeline_e2e` row,
-    * reclaimed recursively at JVM exit. Uniqueness (not overwrite-in-
-    * place) is the concurrency contract: two drivers benching on one
-    * host can never read each other's half-written `kept/`/`uniq/`
-    * stages. Exit-time (not eager) deletion because the returned frame
-    * lazily re-reads the stage files until the caller's final action. */
-  private def pipelineStageDir(): java.io.File = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pipeline_e2e_stages_").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(dir)
-    }))
-    dir
-  }
 
   /** Deterministic constructed URL per doc (see url_domain_stats): mixes
     * case, www, a ccTLD, an explicit port, a trailing slash and a

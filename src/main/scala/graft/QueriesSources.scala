@@ -65,8 +65,7 @@ object QueriesSources {
     // fromParquet with column list + [begin, end) time range: projection
     // and range filter reach the scan (asserted in PlanShapeSpec).
     "from_parquet_pruned" -> ((s, dir) => {
-      try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      catch { case _: Throwable => }
+      QueriesCore.nanosAsLong(s)
       Sources.fromParquet(s, s"$dir/events.parquet",
         columns = Seq("event_id", "value"),
         beginNanos = Some(T0 + 5 * DAY), endNanos = Some(T0 + 15 * DAY),

@@ -20,57 +20,25 @@ import org.apache.spark.storage.StorageLevel
  * composition: stage-boundary materialization, construction-scoped cache
  * hygiene, and the column plumbing between stages.
  *
- * Two intermediate frames feed SEVERAL downstream consumers each — the
+ * Two intermediate frames feed several downstream consumers each — the
  * filter survivors `kept` (pair mining, cluster labels, the
  * representative semi-join) and the dedup survivors `uniq` (span mining
- * and span strip) — so HOW they are materialized is the pipeline's main
- * scale knob, exposed as [[Boundary]]:
- *
- *  - [[Boundary.Parquet]] (the 100 TB form): each is written ONCE to
- *    parquet under a caller-owned directory and every consumer reads the
- *    files — write once, read thrice, zero executor-storage footprint,
- *    and re-consumable for free after the run. The caller owns the
- *    directory's lifecycle (the returned frame lazily re-reads it, so
- *    delete only after the last downstream action).
- *  - [[Boundary.Persist]]: construction-scoped `MEMORY_AND_DISK` persists,
- *    swept before return (the construction is eager end-to-end — the
- *    label rounds and the final shuffle sort all run at call time — so
- *    the sweep is safe and the call leaves NO residual cache). Right for
- *    interactive runs at memory-sized corpora; at cluster scale two
- *    near-corpus-sized text snapshots in executor storage is a
- *    cluster-storage event — prefer Parquet.
- *  - [[Boundary.Recompute]]: no materialization; each consumer re-derives
- *    its input (the filter kernel twice, the LSH mine + label rounds
- *    twice for `uniq`'s two consumers). Zero storage, maximum recompute —
- *    right only when the dedup tier is cheap relative to storage.
- *
- * Determinism: every stage is content-deterministic (seeded portable
- * hashes, partition- and order-independent — pinned by the AQE /
- * partition-layout invariance suites), so the output is bit-identical
- * across boundary modes; the registry row's oracle hash does not depend
- * on the mode.
+ * and span strip). Both are persisted `MEMORY_AND_DISK` for the
+ * construction and released before return: the construction is eager
+ * end-to-end (the label rounds and the final shuffle sort run at call
+ * time), so the call leaves no residual cache. Every stage is
+ * content-deterministic (seeded portable hashes, partition- and
+ * order-independent — pinned by the AQE / partition-layout invariance
+ * suites).
  *
  * Returns the packed, shuffled corpus: the input id column, the scrubbed
  * `textCol`, `quality` (the PPS weight), `n_tokens` (the BPE token
  * count), `pack_bucket`, `pack_id`, `pack_offset`, `shuffle_pos`.
  * NOTE: the call is EAGER ([[Sampling.shufflePositions]] runs its sort at
- * call time; boundary writes run theirs) — downstream actions replay only
- * the final sort's reduce side.
+ * call time) — downstream actions replay only the final sort's reduce
+ * side.
  */
 object Pipeline {
-
-  /** Materialization strategy for the multi-consumer stage outputs. */
-  sealed trait Boundary
-  object Boundary {
-    /** Construction-scoped `MEMORY_AND_DISK` persists, swept before
-      * return. Interactive / memory-sized corpora. */
-    case object Persist extends Boundary
-    /** Write each boundary frame once to `dir/<stage>` and read it back —
-      * the write-once-read-thrice 100 TB form. Caller owns `dir`. */
-    final case class Parquet(dir: String) extends Boundary
-    /** No materialization: consumers recompute their inputs. */
-    case object Recompute extends Boundary
-  }
 
   /**
    * Stage parameters, defaulting to the `pipeline_e2e` registry row's
@@ -102,33 +70,18 @@ object Pipeline {
    * inject synthetic PII for drills; it must keep `idCol`/`textCol`.
    */
   def run(docs: DataFrame, cfg: Config = Config(),
-          boundary: Boundary = Boundary.Persist,
           scrub: Option[DataFrame => DataFrame] = None): DataFrame = {
     require(cfg.sampleRate >= 0.0, s"sampleRate must be >= 0, got ${cfg.sampleRate}")
     val s = docs.sparkSession
     val cachedBefore = s.sparkContext.getPersistentRDDs.keySet
-    val sweep = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
-    def stage(df: DataFrame, name: String): DataFrame = boundary match {
-      case Boundary.Persist =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        sweep += (() => p.unpersist(blocking = false))
-        p
-      case Boundary.Parquet(dir) =>
-        val path = s"$dir/$name"
-        df.write.mode("overwrite").parquet(path)
-        s.read.parquet(path)
-      case Boundary.Recompute => df
-    }
-
-    val kept = stage(
-      TextStats.hardFilter(docs, cfg.textCol, cfg.minWords, cfg.maxWords)
-        .filter(F.col("keep")).select(cfg.idCol, cfg.textCol), "kept")
+    val kept = TextStats.hardFilter(docs, cfg.textCol, cfg.minWords, cfg.maxWords)
+      .filter(F.col("keep")).select(cfg.idCol, cfg.textCol)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val pairs = Dedup.minHashDedupPairs(kept, cfg.idCol, cfg.textCol,
       cfg.numHashes, cfg.bands, cfg.shingleSize, threshold = cfg.jaccard)
-    val uniq = stage(
-      Dedup.dedupByClusters(kept, cfg.idCol, pairs)
-        .select(cfg.idCol, cfg.textCol), "uniq")
+    val uniq = Dedup.dedupByClusters(kept, cfg.idCol, pairs)
+      .select(cfg.idCol, cfg.textCol).persist(StorageLevel.MEMORY_AND_DISK)
     val spans = Dedup.duplicateSpans(uniq, cfg.idCol, cfg.textCol, cfg.spanN)
     val stripped = Dedup.stripDuplicateSpans(uniq, cfg.idCol, cfg.textCol, spans)
     val scrubbed = scrub.getOrElse((df: DataFrame) =>
@@ -142,13 +95,14 @@ object Pipeline {
       cfg.idCol, "n_tokens", cfg.packBudget, cfg.packBuckets, cfg.seed)
     val shuffled = Sampling.shufflePositions(packed, cfg.idCol, cfg.seed)
 
-    // The construction above is eager end-to-end (boundary writes, the
-    // cluster-label rounds, the shuffle sort), so everything pinned during
-    // construction — the Persist boundaries AND dupClusters' internal
-    // label-round caches — can be released before returning: the final
-    // frame replays only the last sort's reduce side from shuffle files
-    // (Parquet boundaries re-read their files). No residual cache.
-    sweep.foreach(_.apply())
+    // The construction above is eager end-to-end (the cluster-label
+    // rounds, the shuffle sort), so everything pinned during construction
+    // — `kept`, `uniq` AND dupClusters' internal label-round caches — can
+    // be released before returning: the final frame replays only the last
+    // sort's reduce side from shuffle files. No residual cache. The sweep
+    // frees RDD blocks only; `kept`/`uniq` are unpersisted by name so their
+    // cache-manager entries go too.
+    Seq(kept, uniq).foreach(_.unpersist(blocking = false))
     s.sparkContext.getPersistentRDDs
       .filterNot { case (id, _) => cachedBefore(id) }
       .values.foreach(_.unpersist(blocking = false))

@@ -386,26 +386,16 @@ object PyApi {
     graft.llm.Sampling.shufflePositions(df, idCol, seed)
 
   /** The composed pre-training pipeline (graft.llm.Pipeline) with the
-    * default PII scrub. `boundary` is `"persist"`, `"recompute"`, or
-    * `"parquet:<dir>"` — see [[graft.llm.Pipeline.Boundary]]. */
+    * default PII scrub. */
   def pipelineRun(df: DataFrame, idCol: String, textCol: String,
                   minWords: Int, maxWords: Int, numHashes: Int, bands: Int,
                   shingleSize: Int, jaccard: Double, spanN: Int,
                   sampleRate: Double, packBudget: Long, packBuckets: Int,
-                  seed: Long, boundary: String): DataFrame = {
-    val b = boundary match {
-      case "persist" => graft.llm.Pipeline.Boundary.Persist
-      case "recompute" => graft.llm.Pipeline.Boundary.Recompute
-      case p if p.startsWith("parquet:") =>
-        graft.llm.Pipeline.Boundary.Parquet(p.stripPrefix("parquet:"))
-      case other => throw new IllegalArgumentException(
-        s"boundary must be persist | recompute | parquet:<dir>, got $other")
-    }
+                  seed: Long): DataFrame =
     graft.llm.Pipeline.run(df,
       graft.llm.Pipeline.Config(idCol, textCol, minWords, maxWords,
         numHashes, bands, shingleSize, jaccard, spanN, sampleRate,
-        packBudget, packBuckets, seed), b)
-  }
+        packBudget, packBuckets, seed))
 
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
                      n: Int): DataFrame =

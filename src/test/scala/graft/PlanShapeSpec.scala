@@ -485,10 +485,15 @@ class PlanShapeSpec extends SparkTestBase {
     // sweeps everything it pinned (incl. dupClusters' label rounds)
     // before returning — the run must ADD no cached RDD (set difference,
     // not size: the ContextCleaner may concurrently release unrelated
-    // GC'd caches from earlier tests)
+    // GC'd caches from earlier tests) and leave no stage files on disk
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def stageDirs: Set[String] = Option(tmp.list()).fold(Set.empty[String])(
+      _.filter(_.startsWith("graft_pipeline_e2e_stages_")).toSet)
+    val dirsBefore = stageDirs
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = QueriesLLM.queries("pipeline_e2e")(spark, "/root/testdata/sf0.001")
     out.collect().length should be >= 0
     (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+    (stageDirs -- dirsBefore) shouldBe empty
   }
 }
